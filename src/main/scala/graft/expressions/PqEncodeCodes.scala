@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
 /** Codegen'd product-quantization encoding — the whole per-row PQ encode
   * in one pass: given a raw vector `vec` (array<double>), its L2 norm
   * `norm` (double, > 0 upstream), and `cands` = the codebooks folded
-  * into one broadcast value — array (subspace-ascending) of
-  * array<struct<code int, cent array<double>, c2 double>>
-  * (code-ascending, `c2` = ‖cent‖² precomputed) — returns
+  * into one broadcast value ([[FoldedPqBooks]]: array, subspace-ascending,
+  * of struct<subspace int, array<struct<code int, cent array<double>,
+  * c2 double>>>, code-ascending, `c2` = ‖cent‖² precomputed) — returns
   * struct<codes: array<int>, rn: double> where `codes[j]` is the code
   * minimizing the subspace distance
   *
@@ -28,7 +28,9 @@ import org.apache.spark.sql.types._
   * comes from each candidate centroid's own length; a vector shorter
   * than j·sub+sub contributes only its available elements (the slice()
   * clamp semantics of the previous route). Null/empty candidates for any
-  * subspace, or a null vector, yield null.
+  * subspace, a subspace entry whose stored id is not its position (a
+  * whole subspace missing from the codebooks), or a null vector, yield
+  * null.
   */
 case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
     extends TernaryExpression {
@@ -42,20 +44,12 @@ case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
       case ArrayType(DoubleType, _) => true
       case _                        => false
     }
-    val candsOk = cands.dataType match {
-      case ArrayType(ArrayType(StructType(f), _), _) if f.length == 3 =>
-        f(0).dataType == IntegerType &&
-          (f(1).dataType match {
-            case ArrayType(DoubleType, _) => true
-            case _                        => false
-          }) && f(2).dataType == DoubleType
-      case _ => false
-    }
+    val candsOk = FoldedPqBooks.accepts(cands.dataType)
     if (vecOk && norm.dataType == DoubleType && candsOk)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "graft_pq_encode expects (array<double>, double, " +
-        "array<array<struct<int, array<double>, double>>>), got " +
+        "array<struct<int, array<struct<int, array<double>, double>>>>), got " +
         s"${vec.dataType.sql} / ${norm.dataType.sql} / ${cands.dataType.sql}")
   }
 
@@ -79,7 +73,9 @@ case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
     var j = 0
     while (j < m) {
       if (subs.isNullAt(j)) return null
-      val list = subs.getArray(j)
+      val entry = subs.getStruct(j, 2)
+      if (entry.isNullAt(0) || entry.getInt(0) != j || entry.isNullAt(1)) return null
+      val list = entry.getArray(1)
       val k = list.numElements()
       if (k == 0) return null
       var best = Double.PositiveInfinity
@@ -120,6 +116,7 @@ case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
       val c2sum = ctx.freshName("c2sum")
       val off = ctx.freshName("off")
       val j = ctx.freshName("j")
+      val entry = ctx.freshName("entry")
       val list = ctx.freshName("list")
       val k = ctx.freshName("k")
       val best = ctx.freshName("best")
@@ -142,7 +139,11 @@ case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
          |int $off = 0;
          |for (int $j = 0; $j < $m && !$bad; $j++) {
          |  if ($c.isNullAt($j)) { $bad = true; break; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $list = $c.getArray($j);
+         |  org.apache.spark.sql.catalyst.InternalRow $entry = $c.getStruct($j, 2);
+         |  if ($entry.isNullAt(0) || $entry.getInt(0) != $j || $entry.isNullAt(1)) {
+         |    $bad = true; break;
+         |  }
+         |  org.apache.spark.sql.catalyst.util.ArrayData $list = $entry.getArray(1);
          |  int $k = $list.numElements();
          |  if ($k == 0) { $bad = true; break; }
          |  double $best = Double.POSITIVE_INFINITY;
@@ -180,4 +181,25 @@ case class PqEncodeCodes(vec: Expression, norm: Expression, cands: Expression)
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): PqEncodeCodes =
     copy(vec = newFirst, norm = newSecond, cands = newThird)
+}
+
+/** The folded-codebooks type both PQ kernels ([[PqEncodeCodes]],
+  * [[PqLutArray]]) consume: array (subspace-ascending) of
+  * struct<subspace int, array<struct<code int, cent array<double>,
+  * c2 double>>>. The stored subspace id lets a kernel check that entry j
+  * really is subspace j. */
+private[expressions] object FoldedPqBooks {
+  def accepts(dt: DataType): Boolean = dt match {
+    case ArrayType(StructType(Array(id, cs)), _) if id.dataType == IntegerType =>
+      cs.dataType match {
+        case ArrayType(StructType(f), _) if f.length == 3 =>
+          f(0).dataType == IntegerType &&
+            (f(1).dataType match {
+              case ArrayType(DoubleType, _) => true
+              case _                        => false
+            }) && f(2).dataType == DoubleType
+        case _ => false
+      }
+    case _ => false
+  }
 }

@@ -9,10 +9,9 @@ import org.apache.spark.sql.types._
 /** Codegen'd per-query ADC lookup-table build — the whole dense LUT in
   * one map-only pass: given a raw query vector `vec` (array<double>),
   * its L2 norm `norm` (double, > 0 upstream), `cands` = the codebooks
-  * folded into one broadcast value — array (subspace-ascending) of
-  * array<struct<code int, cent array<double>, c2 double>> (the exact
-  * shape [[PqEncodeCodes]] consumes, so build/append encode and search
-  * LUT share one folded-books layout) — and `slots` = the per-subspace
+  * folded into one broadcast value ([[FoldedPqBooks]], the exact shape
+  * [[PqEncodeCodes]] consumes, so build/append encode and search LUT
+  * share one folded-books layout) — and `slots` = the per-subspace
   * slot stride (the index kind's `codes`), returns array<double> of
   * length m·slots with
   *
@@ -32,8 +31,10 @@ import org.apache.spark.sql.types._
   * projection on the queries frame: no explode, no exchange, no
   * aggregate, O(m·codes·sub) multiplies — the arithmetic floor. Dot
   * order matches [[ArrayDot]] (ascending elements), so LUT values are
-  * bit-identical to the exploded route's. Null vector or null/empty
-  * candidate lists yield null. */
+  * bit-identical to the exploded route's. Null vector, null/empty
+  * candidate lists, or a subspace entry whose stored id is not its
+  * position (a whole subspace missing, which would otherwise shift every
+  * later block) yield null. */
 case class PqLutArray(
     vec: Expression, norm: Expression, cands: Expression, slots: Expression)
     extends QuaternaryExpression {
@@ -48,21 +49,13 @@ case class PqLutArray(
       case ArrayType(DoubleType, _) => true
       case _                        => false
     }
-    val candsOk = cands.dataType match {
-      case ArrayType(ArrayType(StructType(f), _), _) if f.length == 3 =>
-        f(0).dataType == IntegerType &&
-          (f(1).dataType match {
-            case ArrayType(DoubleType, _) => true
-            case _                        => false
-          }) && f(2).dataType == DoubleType
-      case _ => false
-    }
+    val candsOk = FoldedPqBooks.accepts(cands.dataType)
     if (vecOk && norm.dataType == DoubleType && candsOk &&
         slots.dataType == IntegerType && slots.foldable)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "graft_pq_lut expects (array<double>, double, " +
-        "array<array<struct<int, array<double>, double>>>, int literal), got " +
+        "array<struct<int, array<struct<int, array<double>, double>>>>, int literal), got " +
         s"${vec.dataType.sql} / ${norm.dataType.sql} / ${cands.dataType.sql} / ${slots.dataType.sql}")
   }
 
@@ -83,7 +76,9 @@ case class PqLutArray(
     var j = 0
     while (j < m) {
       if (subs.isNullAt(j)) return null
-      val list = subs.getArray(j)
+      val entry = subs.getStruct(j, 2)
+      if (entry.isNullAt(0) || entry.getInt(0) != j || entry.isNullAt(1)) return null
+      val list = entry.getArray(1)
       val k = list.numElements()
       if (k == 0) return null
       var sub = 0
@@ -115,6 +110,7 @@ case class PqLutArray(
       val lut = ctx.freshName("lut")
       val off = ctx.freshName("off")
       val j = ctx.freshName("j")
+      val entry = ctx.freshName("entry")
       val list = ctx.freshName("list")
       val k = ctx.freshName("k")
       val sub = ctx.freshName("sub")
@@ -134,7 +130,11 @@ case class PqLutArray(
          |int $off = 0;
          |for (int $j = 0; $j < $m && !$bad; $j++) {
          |  if ($c.isNullAt($j)) { $bad = true; break; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $list = $c.getArray($j);
+         |  org.apache.spark.sql.catalyst.InternalRow $entry = $c.getStruct($j, 2);
+         |  if ($entry.isNullAt(0) || $entry.getInt(0) != $j || $entry.isNullAt(1)) {
+         |    $bad = true; break;
+         |  }
+         |  org.apache.spark.sql.catalyst.util.ArrayData $list = $entry.getArray(1);
          |  int $k = $list.numElements();
          |  if ($k == 0) { $bad = true; break; }
          |  int $sub = 0;

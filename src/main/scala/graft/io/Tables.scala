@@ -401,7 +401,18 @@ object Tables {
     * ksStatistic convention), so the rejection rides the rebuild's own
     * scan instead of costing an eager validation job (r21: the eager
     * `require(lateBatch.isEmpty)` was a full extra pass over dim +
-    * batch on every call). */
+    * batch on every call).
+    *
+    * The rejection is therefore LAZY: this call returns without
+    * validating the batch, and an out-of-order batch fails only when an
+    * action runs the result — as a Spark execution error carrying the
+    * message below, no longer an `IllegalArgumentException` at call
+    * time. It fires only for rows the action actually computes: a read
+    * that never executes the rebuilt tail, or one whose filter on the
+    * key or timestamp prunes the offending batch rows before the guard
+    * projection, returns without error. Callers that need the old
+    * all-or-nothing check must materialise the full result (for example
+    * write it) before trusting it. See DIVERGENCES.md #19. */
   def applyScd2(
       dim: DataFrame,
       changes: DataFrame,

@@ -680,33 +680,6 @@ object Similarity {
     }
   }
 
-  /** Seeded coarse-quantizer fit over a bounded sample of the normalized
-    * corpus. Hash-ordered top-n = a uniform deterministic pseudo-random
-    * sample (distributed TakeOrdered); a bare limit() would take a
-    * partition-order PREFIX and bias the centroids on any sorted/clustered
-    * corpus. A coarse quantizer doesn't need convergence — cells just need
-    * to be roughly balanced; 8 iterations halves the fit cost vs the
-    * default 20 with no measurable recall change, and random init (not
-    * k-means||) skips several extra passes over the fit sample — the exact
-    * re-rank fixes any assignment noise.
-    *
-    * Above [[IvfFlatFitMaxCells]] the fit is TWO-LEVEL (the classic
-    * inverted-multi-index / IVF-HNSW coarse-fit move): fit √cells
-    * super-centers with spark.ml over the sample, assign the sample to
-    * them, then run a deterministic local Lloyd's per super-cell (one
-    * `mapGroups` — groups are sample-bounded) with the remaining cell
-    * budget apportioned by super-cell mass (largest-remainder, so big
-    * clusters get proportionally more cells — better balance than an
-    * even split). Fit cost drops from fitSample·cells to
-    * ~2·fitSample·√cells distances per iteration, which is what lets
-    * [[ivfAutoNlist]] keep ~√N cells far beyond the old 4096 cap. A
-    * super-cell that caught no sample points contributes its own center
-    * as a single cell, so assignment always has candidates. The actual
-    * cell count can come out slightly under `cells` (a sample group
-    * cannot yield more distinct centroids than it has points) but never
-    * over — [[apportionCells]] trims the min-1 floor's overshoot back
-    * from the largest allocations (r16 ADVICE); downstream reads cells
-    * off the centroid frame, never the request. */
   /** Two-level fit sample floor, points per cell: a 100k sample on a
     * 6k-cell request is ~16 points per centroid — noise, not a fit
     * (measured on the 40M cap-lift probe). The two-level fit's cost is
@@ -755,58 +728,107 @@ object Similarity {
     }
   }
 
-  /** Work bound for the driver-local flat fit: sample × cells × dims ×
-    * iters distance multiplies — ~2·10⁸ is a few hundred ms of
-    * single-core Lloyd's, the break-even against the ~16-job
-    * spark.ml fit (2 scheduled jobs per iteration) it replaces. */
+  /** Work bound of the driver-local k-means fits, shared by [[ivfFit]]'s
+    * flat fit and [[pqFit]] through one gate ([[localFitSample]]):
+    * sample × centers × dims × iters distance multiplies (for PQ summed
+    * over the m subspaces, which is the same product) — ~2·10⁸ is a few
+    * hundred ms of single-core Lloyd's, the break-even against the
+    * ~9–16 scheduled jobs one spark.ml fit launches. */
   private[graft] val LocalFitMaxOps: Long = 200000000L
 
   /** Hard row cap on the local-fit sample collect, independent of the
     * ops bound — bounds driver memory at ~20k × dims doubles. */
   private[graft] val LocalFitMaxPoints: Int = 20000
 
+  /** The hash-ordered fit sample: top-n by `xxhash64(id)` — a uniform,
+    * deterministic pseudo-random sample (distributed TakeOrdered). */
+  private def hashSample(corpusVec: DataFrame, idCol: String, n: Int): DataFrame =
+    corpusVec
+      .select(col("__mlvec"), xxhash64(col(idCol)).as("__h"))
+      .orderBy(col("__h")).limit(n)
+
+  /** The one local-vs-distributed gate of the k-means fits. A fit of `k`
+    * centers over `dims`-wide points runs on the driver when its whole
+    * sample provably fits the work bound: at most
+    * `min(LocalFitMaxPoints, LocalFitMaxOps / (k · dims · 8))` points.
+    * The probe collects at most that bound + 1 rows of the same
+    * hash-ordered sample the distributed fit uses, so a corpus over the
+    * bound never collects in full. Returns the sample's points (hash
+    * order) when the fit is local and has at least `minPts` of them;
+    * None when the caller must run its spark.ml fit instead. */
+  private def localFitSample(
+      corpusVec: DataFrame, idCol: String, fitSample: Int, k: Int, dims: Int,
+      minPts: Int): Option[Array[Array[Double]]] = {
+    val maxLocalPts =
+      if (dims <= 0) 0
+      else math.min(LocalFitMaxPoints.toLong,
+        LocalFitMaxOps / (math.max(1, k).toLong * dims * 8)).toInt
+    if (fitSample <= 0 || maxLocalPts < math.max(minPts, 2)) None
+    else {
+      val probe = hashSample(corpusVec, idCol,
+        math.min(fitSample, maxLocalPts + 1)).collect()
+      if (probe.length > maxLocalPts || probe.length < math.max(minPts, 1)) None
+      else Some(probe.map(
+        _.getAs[org.apache.spark.ml.linalg.Vector]("__mlvec").toArray))
+    }
+  }
+
+  /** Seeded coarse-quantizer fit over a bounded sample of the normalized
+    * corpus. Hash-ordered top-n = a uniform deterministic pseudo-random
+    * sample (distributed TakeOrdered); a bare limit() would take a
+    * partition-order PREFIX and bias the centroids on any sorted/clustered
+    * corpus. A coarse quantizer doesn't need convergence — cells just need
+    * to be roughly balanced; 8 iterations halves the fit cost vs the
+    * default 20 with no measurable recall change, and random init (not
+    * k-means||) skips several extra passes over the fit sample — the exact
+    * re-rank fixes any assignment noise.
+    *
+    * Above [[IvfFlatFitMaxCells]] the fit is TWO-LEVEL (the classic
+    * inverted-multi-index / IVF-HNSW coarse-fit move): fit √cells
+    * super-centers with spark.ml over the sample, assign the sample to
+    * them, then run a deterministic local Lloyd's per super-cell (one
+    * `mapGroups` — groups are sample-bounded) with the remaining cell
+    * budget apportioned by super-cell mass (largest-remainder, so big
+    * clusters get proportionally more cells — better balance than an
+    * even split). Fit cost drops from fitSample·cells to
+    * ~2·fitSample·√cells distances per iteration, which is what lets
+    * [[ivfAutoNlist]] keep ~√N cells far beyond the old 4096 cap. A
+    * super-cell that caught no sample points contributes its own center
+    * as a single cell, so assignment always has candidates. The actual
+    * cell count can come out slightly under `cells` (a sample group
+    * cannot yield more distinct centroids than it has points) but never
+    * over — [[apportionCells]] trims the min-1 floor's overshoot back
+    * from the largest allocations; downstream reads cells off the
+    * centroid frame, never the request.
+    *
+    * The flat fit (cells ≤ [[IvfFlatFitMaxCells]]) goes through the same
+    * local-vs-distributed gate as [[pqFit]] ([[localFitSample]]): a
+    * sample inside the [[LocalFitMaxOps]] work bound is collected once
+    * and fitted on the driver by [[localLloyd]], replacing the ~16
+    * scheduled jobs of the spark.ml fit; that path ignores `seed`, as
+    * it is a deterministic function of the hash-ordered sample. */
   private[graft] def ivfFit(
       corpusVec: DataFrame, idCol: String, cells: Int, seed: Long,
       fitSample: Int): IvfQuantizer = {
-    def sampled(n: Int) = corpusVec
-      .select(col("__mlvec"), xxhash64(col(idCol)).as("__h"))
-      .orderBy(col("__h")).limit(n)
     if (cells <= IvfFlatFitMaxCells) {
-      // Small-fit fast path (r20): the spark.ml fit launches ~2 scheduled
-      // jobs per Lloyd's iteration — ~16 driver round-trips that DOMINATE
-      // a one-shot operator's wall time when the sample is tiny (job
-      // profile: the k-means job storm under cross_doc_neighbors_exact /
-      // ann_ivf_topk). When the WHOLE sample is provably small (ops and
-      // row bounds below), collect it once (hash-ordered — same
-      // deterministic sample the distributed fit uses) and run the same
-      // deterministic localLloyd the two-level sub-fits already run in
-      // executors. The probe collects at most maxLocalPts+1 rows; a
-      // corpus larger than the bound falls through to spark.ml with the
-      // identical sample definition. Every oracle-gated query is
-      // clustering-invariant by construction (DuckDB replays them with no
-      // k-means); approximate operating points are re-gated by the
-      // recall harness.
-      val dims = vecWidth(corpusVec, "__cv")
-      val maxLocalPts =
-        if (dims <= 0) 0
-        else math.min(LocalFitMaxPoints.toLong,
-          LocalFitMaxOps / (math.max(1, cells).toLong * dims * 8)).toInt
-      val probe =
-        if (maxLocalPts >= math.max(cells, 2))
-          sampled(math.min(fitSample, maxLocalPts + 1)).collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      if (probe.nonEmpty && probe.length <= maxLocalPts &&
-          probe.length >= cells && fitSample > 0) {
-        val pts = probe
-          .map(_.getAs[org.apache.spark.ml.linalg.Vector]("__mlvec").toArray)
-        LocalQuantizer(localLloyd(pts, cells, iters = 8))
-      } else
-        FlatQuantizer(new org.apache.spark.ml.clustering.KMeans()
-          .setK(cells).setSeed(seed).setMaxIter(8).setInitMode("random")
-          .setFeaturesCol("__mlvec").setPredictionCol("__cell")
-          .fit(sampled(fitSample).drop("__h")))
+      // Small-fit fast path: the spark.ml fit's ~16 driver
+      // round-trips DOMINATE a one-shot operator's wall time when the
+      // sample is tiny (job profile: the k-means job storm under
+      // cross_doc_neighbors_exact / ann_ivf_topk). Every oracle-gated
+      // query is clustering-invariant by construction (DuckDB replays
+      // them with no k-means); approximate operating points are re-gated
+      // by the recall harness.
+      localFitSample(corpusVec, idCol, fitSample, k = cells,
+          dims = vecWidth(corpusVec, "__cv"), minPts = cells) match {
+        case Some(pts) => LocalQuantizer(localLloyd(pts, cells, iters = 8))
+        case None =>
+          FlatQuantizer(new org.apache.spark.ml.clustering.KMeans()
+            .setK(cells).setSeed(seed).setMaxIter(8).setInitMode("random")
+            .setFeaturesCol("__mlvec").setPredictionCol("__cell")
+            .fit(hashSample(corpusVec, idCol, fitSample).drop("__h")))
+      }
     } else {
-      val fitFrame = sampled(
+      val fitFrame = hashSample(corpusVec, idCol,
         math.max(fitSample, IvfSubFitPointsPerCell * cells))
       val spark = corpusVec.sparkSession
       import spark.implicits._
@@ -1081,10 +1103,21 @@ object Similarity {
   /** Fit product-quantization codebooks on a bounded sample of the
     * normalized corpus: `m` contiguous subspaces, each with its own
     * k-means codebook of up to `codes` centroids (clamped to the sample
-    * size; the effective count is what the caller must persist). Seeded
-    * per subspace; the sample is hash-ordered like [[ivfFit]]'s so the
-    * codebooks are a deterministic function of the data. Returns the
-    * tiny broadcast frame (subspace, code, cent ARRAY<DOUBLE>). */
+    * size; the effective count is what the caller must persist). The
+    * sample is hash-ordered like [[ivfFit]]'s, so the codebooks are a
+    * deterministic function of the data. Returns the tiny broadcast
+    * frame (subspace, code, cent ARRAY<DOUBLE>) with exactly
+    * `codesEff` codes per subspace, and `codesEff`.
+    *
+    * One gate serves this fit and [[ivfFit]]'s flat fit
+    * ([[localFitSample]]): all m subspace fits together cost
+    * sample × codes × dim × 8 multiplies, so when that stays inside
+    * [[LocalFitMaxOps]] the sample is collected once and each subspace
+    * slice is fitted on the driver by [[localLloyd]]. That replaces the
+    * m sequential spark.ml fits of ~9 scheduled jobs each; the local
+    * path ignores `seed`, as it is a deterministic function of the
+    * hash-ordered sample. Above the bound each subspace runs its own
+    * spark.ml fit, seeded `seed + j`. */
   private[graft] def pqFit(
       corpusVec: DataFrame,
       idCol: String,
@@ -1098,27 +1131,41 @@ object Similarity {
     val dim = corpusVec.select(size(col("__cv"))).head().getInt(0)
     require(dim % m == 0, s"vector dim $dim must divide by m=$m subspaces")
     val sub = dim / m
-    val sample = corpusVec
-      .select(vector_to_array(col("__mlvec")).as("__u"), xxhash64(col(idCol)).as("__h"))
-      .orderBy(col("__h")).limit(fitSample).drop("__h")
-      .persist()
-    try {
-      val n = sample.count()
-      val codesEff = math.min(codes.toLong, n).toInt
-      require(codesEff > 0, "pqFit needs a non-empty corpus")
-      val books = (0 until m).flatMap { j =>
-        val fitFrame = sample.select(
-          array_to_vector(slice(col("__u"), j * sub + 1, sub)).as("__sv"))
-        val km = new org.apache.spark.ml.clustering.KMeans()
-          .setK(codesEff).setSeed(seed + j).setMaxIter(8).setInitMode("random")
-          .setFeaturesCol("__sv").setPredictionCol("__c")
-          .fit(fitFrame)
-        km.clusterCenters.zipWithIndex.map { case (c, i) => (j, i, c.toArray.toSeq) }
-      }
-      // unhinted: buildIvfPq WRITES this frame (hint would drop with a
-      // warning); pqEncode/pqLut hint it at their joins
-      (books.toDF("subspace", "code", "cent"), codesEff)
-    } finally { sample.unpersist(); () }
+    // codesEff ≤ min(codes, fitSample): the bound's k never undercounts
+    val (centers, codesEff) = localFitSample(corpusVec, idCol, fitSample,
+        k = math.min(codes, fitSample), dims = dim, minPts = 1) match {
+      case Some(pts) =>
+        val codesEff = math.min(codes, pts.length)
+        ((0 until m).map { j =>
+          localLloyd(pts.map(java.util.Arrays.copyOfRange(_, j * sub, (j + 1) * sub)),
+            codesEff, iters = 8)
+        }, codesEff)
+      case None =>
+        val sample = hashSample(corpusVec, idCol, fitSample)
+          .select(vector_to_array(col("__mlvec")).as("__u"))
+          .persist()
+        try {
+          val n = sample.count()
+          val codesEff = math.min(codes.toLong, n).toInt
+          require(codesEff > 0, "pqFit needs a non-empty corpus")
+          ((0 until m).map { j =>
+            val fitFrame = sample.select(
+              array_to_vector(slice(col("__u"), j * sub + 1, sub)).as("__sv"))
+            new org.apache.spark.ml.clustering.KMeans()
+              .setK(codesEff).setSeed(seed + j).setMaxIter(8).setInitMode("random")
+              .setFeaturesCol("__sv").setPredictionCol("__c")
+              .fit(fitFrame)
+              .clusterCenters.map(_.toArray)
+          }, codesEff)
+        } finally { sample.unpersist(); () }
+    }
+    val books = for {
+      (cents, j) <- centers.zipWithIndex
+      (c, i) <- cents.zipWithIndex
+    } yield (j, i, c.toSeq)
+    // unhinted: buildIvfPq WRITES this frame (hint would drop with a
+    // warning); pqEncode/pqLut hint it at their joins
+    (books.toDF("subspace", "code", "cent"), codesEff)
   }
 
   /** Encode each vector against the codebooks: per subspace, the nearest
@@ -1173,10 +1220,13 @@ object Similarity {
     * the map-only cell assignment this makes the whole IVF-PQ
     * build/append encode pipeline shuffle-free on the corpus side. */
   /** The codebooks folded into ONE row (`__books`): array
-    * (subspace-ascending) of array<struct<code, cent, __c2>>
-    * (code-ascending, `__c2` = ‖cent‖²) — the broadcast shape both
-    * [[graft.expressions.PqEncodeCodes]] (build/append encode) and
-    * [[graft.expressions.PqLutArray]] (search LUT) consume. */
+    * (subspace-ascending) of struct<subspace, __cs> where `__cs` is
+    * array<struct<code, cent, __c2>> (code-ascending, `__c2` = ‖cent‖²)
+    * — the broadcast shape both [[graft.expressions.PqEncodeCodes]]
+    * (build/append encode) and [[graft.expressions.PqLutArray]] (search
+    * LUT) consume. The stored subspace id rides along so the kernels can
+    * refuse (null) a codebook with a whole subspace missing instead of
+    * shifting every later block. */
   private[similarity] def foldedBooks(books: DataFrame): DataFrame =
     books
       .select(col("subspace"),
@@ -1184,7 +1234,7 @@ object Similarity {
           dot(col("cent"), col("cent")).as("__c2")).as("__c"))
       .groupBy(col("subspace"))
       .agg(array_sort(collect_list(col("__c"))).as("__cs"))
-      .agg(expr("transform(sort_array(collect_list(struct(subspace, __cs))), p -> p.__cs)")
+      .agg(sort_array(collect_list(struct(col("subspace"), col("__cs"))))
         .as("__books"))
 
   private[graft] def pqEncodeColumns(df: DataFrame, books: DataFrame): DataFrame = {

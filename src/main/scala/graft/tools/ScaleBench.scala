@@ -743,7 +743,7 @@ object ScaleBench {
       val t0 = System.nanoTime()
       val got = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // drain the async listener bus before reading
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       if (label == "old_window") oldCells = got
       else require(got == oldCells,

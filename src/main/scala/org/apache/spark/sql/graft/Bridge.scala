@@ -14,8 +14,9 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Drain the listener bus so SparkListener-accumulated metrics are
-    * complete before a benchmark snapshot (`listenerBus` is
-    * private[spark]; this re-export exists for graft.Bench only). */
+    * complete before they are read (`listenerBus` is private[spark]):
+    * the deterministic replacement for sleeping on the async bus, used
+    * by the benchmark, the profiling tools and listener-counting specs. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 

@@ -260,6 +260,60 @@ class AnnIndexSpec extends SparkSpec {
     }
     assert(got.values.head(2 * codesEff + 5).isNegInfinity,
       "planted codebook hole must surface as -inf")
+    // a WHOLE subspace missing must not shift the later blocks: both
+    // kernels check each folded entry's stored subspace id against its
+    // position and return null instead
+    val noSub3 = books.filter(col("subspace") =!= 3)
+    val luts = Similarity.pqLut(queries, "vec_id", "embedding", noSub3, codesEff)
+      .collect()
+    assert(luts.nonEmpty && luts.forall(_.isNullAt(1)),
+      "LUT over codebooks missing a subspace must be null, not shifted")
+    val encoded = Similarity.pqEncodeColumns(corpusVec.drop("__mlvec"), noSub3)
+      .select(col("__codes"), col("__rn")).collect()
+    assert(encoded.nonEmpty && encoded.forall(r => r.isNullAt(0) && r.isNullAt(1)),
+      "encode against codebooks missing a subspace must be null, not shifted")
+  }
+
+  test("pqFit gate parity: local and spark.ml fits share the codebook contract") {
+    // both sides of the local-fit gate: the fixture embeddings (500 x
+    // 64-d, codes 256) fit under LocalFitMaxOps; 2000 x 64-d is over it
+    val kmJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.stageInfos.exists(_.details.contains("clustering.KMeans")))
+          kmJobs.incrementAndGet()
+    }
+    def fit(corpus: DataFrame): (DataFrame, Int, Int) = {
+      val corpusVec = Similarity.ivfNormalizedCorpus(corpus, "vec_id", "embedding")
+      val sc = spark.sparkContext
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      kmJobs.set(0)
+      sc.addSparkListener(listener)
+      try {
+        val (books, codesEff) = Similarity.pqFit(corpusVec, "vec_id", m = 8,
+          codes = 256, seed = 5L, fitSample = 100000)
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+        (books, codesEff, kmJobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val synthetic = spark.range(2000).select(col("id").as("vec_id"),
+      array((0 until 64).map(j => randn(100L + j)): _*).as("embedding"))
+    val (localBooks, localCodes, localKm) = fit(emb)
+    val (mlBooks, mlCodes, mlKm) = fit(synthetic)
+    assert(localKm === 0, "the local fit must launch no KMeans job")
+    assert(mlKm > 0, "over the bound the spark.ml fit runs (listener sanity)")
+    assert(localCodes === 256 && mlCodes === 256)
+    // identical schema, nullability included
+    assert(localBooks.schema === mlBooks.schema)
+    for ((books, codesEff) <- Seq(localBooks -> localCodes, mlBooks -> mlCodes)) {
+      val got = books.select(col("subspace"), col("code"), size(col("cent")))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
+      assert(got.length === 8 * codesEff)
+      assert(got.map(r => (r._1, r._2)).toSet ===
+        (for (j <- 0 until 8; c <- 0 until codesEff) yield (j, c)).toSet)
+      assert(got.forall(_._3 === 8), "each centroid spans one 8-d subspace")
+    }
   }
 
   test("append assignment is map-only (no window/exchange over batch×centroids) and exact") {
